@@ -20,29 +20,19 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from etl_seattle_call_data_spark.operators.util import clear_caches
 from etl_seattle_call_data_spark.plans.queries import REGISTRY
 from etl_seattle_call_data_spark.session import get_spark
+from tools.bench_regress import regressions
 
 
-def _flagged(
-    prev: dict, timings: dict[str, float], sf: float,
-    threshold: float = 1.3, grace: float = 0.5,
-) -> list[str] | None:
-    """Host-normalized regression flags vs the PRIOR detail table
-    (the committed baseline in a clean checkout) — same rule as
-    tools/bench_regress.py + roundcheck: new > thr * old * host_median
-    + grace. None when no comparable baseline (first run, SF mismatch,
-    empty overlap)."""
-    import statistics
-
+def _flagged(prev: dict, timings: dict[str, float], sf: float) -> list[str] | None:
+    """Regression flags vs the PRIOR detail table (the committed
+    baseline in a clean checkout) under tools/bench_regress.py's rule
+    at roundcheck's 1.3x + 0.5s grace. None when no comparable baseline
+    (first run, SF mismatch, empty overlap)."""
     if prev.get("sf") != sf or not isinstance(prev.get("queries"), dict):
         return None
-    old = prev["queries"]
-    common = [n for n in timings if n in old and old[n] > 0]
-    if not common:
+    if not set(timings) & set(prev["queries"]):
         return None
-    host = statistics.median(timings[n] / old[n] for n in common)
-    return [
-        n for n in common if timings[n] > threshold * old[n] * host + grace
-    ]
+    return regressions(prev["queries"], timings, threshold=1.3, grace=0.5)[0]
 
 
 def main() -> None:

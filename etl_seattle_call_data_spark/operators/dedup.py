@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from etl_seattle_call_data_spark.operators.text import canonical_text, tokens
-from etl_seattle_call_data_spark.operators.util import cache_swap, spread as _spread
+from etl_seattle_call_data_spark.operators.util import barrier, cache_swap, persisted, spread as _spread
 
 SIMHASH_BITS = 60  # 15 hex chars of md5 → fits a signed 64-bit integer
 
@@ -350,8 +350,6 @@ def connected_components(
     own trivial cluster by definition)."""
     from pyspark.storagelevel import StorageLevel
 
-    from etl_seattle_call_data_spark.operators.util import register_cached
-
     # persist + materialize the pair list BEFORE unioning its two
     # directed copies: the union's branches would otherwise each
     # recompute the (expensive) upstream pair pipeline — measured 2× the
@@ -373,56 +371,40 @@ def connected_components(
     edges = cache_swap("cc_edges", edges.repartition(F.col("src")))
     edges.count()  # materialize: every round reads edges
     # generation 0 is read twice per round (neighbour-min probe + the
-    # update join) — persist it like every later generation, or each
-    # round re-runs its distinct shuffle twice
-    labels = (
-        edges.select(F.col("src").alias("node"))
-        .distinct()
-        .withColumn("label", F.col("node"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    prev = labels
-    for _ in range(max_iter):
-        neighbour_min = (
-            edges.join(labels.withColumnRenamed("node", "src"), "src")
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.min("label").alias("nmin"))
-        )
-        # localCheckpoint (not just persist): each generation's LOGICAL
-        # plan otherwise nests the previous generation's plan plus the
-        # full edge lineage — linear-in-rounds logical growth that makes
-        # downstream composition (joins over the cluster table) blow the
-        # driver heap just BUILDING the plan. Checkpointing truncates
-        # lineage to the materialized partitions, exactly what GraphX
-        # does between Pregel rounds. Local (executor-storage) form is
-        # right for this engine's driver-side loop; on a cluster with
-        # flaky executors swap for sc.setCheckpointDir + .checkpoint().
-        updated = (
-            labels.join(neighbour_min, "node", "left")
-            .select(
-                "node",
-                F.least(F.col("label"), F.coalesce(F.col("nmin"), F.col("label"))).alias("label"),
-                (F.col("nmin") < F.col("label")).alias("__changed"),
+    # update join) — hold it like every later generation, or each round
+    # re-runs its distinct shuffle twice. It is released when the loop
+    # ends, after round one's child has materialized.
+    gen0 = edges.select(F.col("src").alias("node")).distinct().withColumn("label", F.col("node"))
+    with persisted(gen0, StorageLevel.MEMORY_AND_DISK) as labels:
+        for _ in range(max_iter):
+            neighbour_min = (
+                edges.join(labels.withColumnRenamed("node", "src"), "src")
+                .groupBy(F.col("dst").alias("node"))
+                .agg(F.min("label").alias("nmin"))
             )
-        ).localCheckpoint(eager=False)
-        # ORDER MATTERS: materialize the new generation (count) while its
-        # parent is still cached, THEN release the parent — releasing
-        # first turns every round into a full-lineage recomputation all
-        # the way back through the pair pipeline (measured 8s warm vs
-        # ~1.5s for a 500-node graph)
-        n_changed = updated.filter(F.col("__changed")).count()
-        prev.unpersist(False)
-        prev = updated
-        labels = updated.drop("__changed")
-        if n_changed == 0:
-            break
-    # Storage reclamation: unpersist() is a no-op for localCheckpoint
-    # blocks — they free via ContextCleaner once the RDD is unreferenced.
-    # The loop drops each generation's reference as it advances, so old
-    # generations become collectable immediately; registering the FINAL
-    # generation replaces (and thereby un-references) the previous
-    # invocation's labels, keeping at most one invocation's blocks live.
-    register_cached("cc_labels", prev)
+            # a barrier per generation: each generation's LOGICAL plan
+            # otherwise nests the previous generation's plan plus the
+            # full edge lineage — linear-in-rounds logical growth that
+            # makes downstream composition (joins over the cluster table)
+            # blow the driver heap just BUILDING the plan. Truncating
+            # lineage to the materialized partitions is exactly what
+            # GraphX does between Pregel rounds.
+            updated = barrier(
+                labels.join(neighbour_min, "node", "left").select(
+                    "node",
+                    F.least(F.col("label"), F.coalesce(F.col("nmin"), F.col("label"))).alias("label"),
+                    (F.col("nmin") < F.col("label")).alias("__changed"),
+                )
+            )
+            # ORDER MATTERS: materialize the new generation (count) while
+            # its parent is still held — releasing the parent first turns
+            # every round into a full-lineage recomputation all the way
+            # back through the pair pipeline (measured 8s warm vs ~1.5s
+            # for a 500-node graph)
+            n_changed = updated.filter(F.col("__changed")).count()
+            labels = updated.drop("__changed")
+            if n_changed == 0:
+                break
     return labels.select(F.col("node").alias("doc_id"), F.col("label").alias("cluster_id"))
 
 
@@ -619,18 +601,13 @@ def passjoin_candidate_pairs(
     name_a < name_b; the caller applies the levenshtein verify."""
     m = k + 1
     # The input feeds BOTH the build and probe branches below, and
-    # callers typically hand us a shuffle distinct — Catalyst does not
-    # dedupe common subtrees, so without a barrier that distinct would
-    # re-evaluate once per branch (CLAUDE.md materialization rule; lazy
-    # localCheckpoint, not persist, per the Spark 4.1 cache-on-cache
-    # AQE NPE note).
-    base = (
+    # callers typically hand us a shuffle distinct — without a barrier
+    # that distinct would re-evaluate once per branch.
+    base = barrier(
         names.select(
             F.col(string_col).alias("__s"),
             *(block_cols or []),
-        )
-        .withColumn("__len", F.length("__s"))
-        .localCheckpoint(eager=False)
+        ).withColumn("__len", F.length("__s"))
     )
 
     def base_len(length):  # length DIV m (Columns have no //)

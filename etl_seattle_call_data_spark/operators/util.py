@@ -2,7 +2,10 @@
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+
 from pyspark.sql import DataFrame
+from pyspark.storagelevel import StorageLevel
 
 
 def spread(df: DataFrame) -> DataFrame:
@@ -23,7 +26,50 @@ def spread(df: DataFrame) -> DataFrame:
     return df
 
 
-_last_cached: dict[str, DataFrame] = {}
+def barrier(df: DataFrame) -> DataFrame:
+    """Hold ``df`` for the rest of the plan it feeds: the engine's one
+    within-plan materialization point. Catalyst does not dedupe common
+    subtrees, so a frame read by 2+ plan branches (a count and a join,
+    a self-join's two arms, a loop's next round) re-evaluates its
+    upstream once per branch unless it is held. The policy, in one
+    place:
+
+    * ``localCheckpoint``, not ``persist``: chained persists form
+      cache-on-cache entries, and Spark 4.1's lazy AQE cache
+      materialization (``TableCacheQueryStage``) can rebuild a
+      dependent entry on an AQE thread with no active session — an NPE
+      first observed at sf1 (``CacheManager.tryRebuildCacheEntry``);
+    * lazy (``eager=False``): the first action that reads the frame
+      materializes it, so building a plan runs no job;
+    * it truncates lineage, so iterative operators keep a
+      constant-depth plan per round;
+    * its blocks are freed by ContextCleaner once the driver drops the
+      last reference to the frame, not by ``unpersist`` and not by
+      ``clear_caches`` (bench.py's periodic ``gc.collect()`` exists for
+      this);
+    * its blocks live in executor storage and are not replicated, so
+      losing an executor fails the query (VERDICT r11 item 3)."""
+    return df.localCheckpoint(eager=False)
+
+
+@contextmanager
+def persisted(df: DataFrame, level: StorageLevel = StorageLevel.MEMORY_AND_DISK_DESER):
+    """Persist ``df`` at ``level`` for the body of a ``with`` block and
+    release it on exit, also when the body raises. For a frame that
+    several writers or actions read inside one call (the default level
+    is ``DataFrame.persist()``'s own)."""
+    held = df.persist(level)
+    try:
+        yield held
+    finally:
+        held.unpersist()
+
+
+# key -> (token, frame): the cross-invocation registry that cache_swap
+# and cache_memo share. cache_swap entries carry _NO_TOKEN, which no
+# cache_memo token equals.
+_registry: dict[str, tuple[object, DataFrame]] = {}
+_NO_TOKEN = object()
 
 
 def cache_swap(key: str, df: DataFrame):
@@ -57,9 +103,7 @@ def cache_swap(key: str, df: DataFrame):
     same computation — so correctness holds, but key hygiene (prefix
     keys with the operator + input identity, as dedup/similarity do)
     is what keeps hit rates honest in shared sessions."""
-    from pyspark.storagelevel import StorageLevel
-
-    old = _last_cached.get(key)
+    _, old = _registry.get(key, (_NO_TOKEN, None))
     if old is not None:
         try:
             if df.sameSemantics(old):
@@ -67,23 +111,9 @@ def cache_swap(key: str, df: DataFrame):
         except Exception:
             pass  # cross-session frames etc. — fall through to swap
         old.unpersist(False)
-    _last_cached[key] = df.persist(StorageLevel.MEMORY_AND_DISK)
-    return _last_cached[key]
-
-
-def register_cached(key: str, df: DataFrame | None) -> None:
-    """Hand an ALREADY-persisted frame to the cross-invocation registry:
-    releases the previous holder of ``key`` (which the caller has
-    finished with) without re-persisting ``df``. For iterative operators
-    that manage per-generation persistence themselves but still need the
-    last generation released on the next invocation."""
-    old = _last_cached.get(key)
-    if old is not None and old is not df:
-        old.unpersist(False)
-    if df is None:
-        _last_cached.pop(key, None)
-    else:
-        _last_cached[key] = df
+    held = df.persist(StorageLevel.MEMORY_AND_DISK)
+    _registry[key] = (_NO_TOKEN, held)
+    return held
 
 
 def clear_caches(table_plans: bool = True) -> None:
@@ -98,13 +128,12 @@ def clear_caches(table_plans: bool = True) -> None:
     GC-pressure evictions (bench.py's every-40-queries sweep) don't
     need to drop them — only the after-an-in-place-rewrite contract
     (the default) does."""
-    for df in _last_cached.values():
+    for _, df in _registry.values():
         try:
             df.unpersist(False)
         except Exception:
             pass  # session may already be stopped
-    _last_cached.clear()
-    _memo_tokens.clear()
+    _registry.clear()
     if table_plans:
         # Table PLAN memos (sources.registry) rest on the same files-are-
         # immutable premise — drop them under the same contract. Imported
@@ -113,9 +142,6 @@ def clear_caches(table_plans: bool = True) -> None:
         from etl_seattle_call_data_spark.sources.registry import clear_table_memo
 
         clear_table_memo()
-
-
-_memo_tokens: dict[str, object] = {}
 
 
 def cache_memo(key: str, token: object, builder):
@@ -131,8 +157,9 @@ def cache_memo(key: str, token: object, builder):
     explicit token is a sound stand-in. Use cache_swap when the token
     would be awkward to state; use this where plan construction itself
     is the cost."""
-    if key in _memo_tokens and _memo_tokens[key] == token and key in _last_cached:
-        return _last_cached[key]
+    held_token, held = _registry.get(key, (_NO_TOKEN, None))
+    if held_token == token:
+        return held
     df = cache_swap(key, builder())
-    _memo_tokens[key] = token
+    _registry[key] = (token, df)
     return df

@@ -26,6 +26,7 @@ from etl_seattle_call_data_spark.operators.calldata import (
     transform_call_data,
 )
 from etl_seattle_call_data_spark.operators.star_schema import split_star_schema
+from etl_seattle_call_data_spark.operators.util import persisted
 from etl_seattle_call_data_spark.sinks import (
     ParquetDirSink,
     Sink,
@@ -76,14 +77,11 @@ def run_batch_pipeline(
         F.sum(F.col("cad_event_number").isNull().cast("long")).alias("null_event_keys"),
         F.sum(F.col("event_date").isNull().cast("long")).alias("null_event_dates"),
     )
-    # One materialization feeds all six writes (reference re-computes 6×).
-    transformed = transformed.persist(StorageLevel.DISK_ONLY)
     sink = sink if sink is not None else ParquetDirSink(output_dir, single_file=single_file)
-    try:
+    # One materialization feeds all six writes (reference re-computes 6×).
+    with persisted(transformed, StorageLevel.DISK_ONLY) as transformed:
         tables = split_star_schema(transformed, dedup_dims=dedup_dims)
         counts = write_tables(tables, sink)
-    finally:
-        transformed.unpersist()
     registered: list[str] = []
     if register_catalog:
         from etl_seattle_call_data_spark.sinks import TableDirSink

@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from etl_seattle_call_data_spark.operators.util import barrier
 from etl_seattle_call_data_spark.plans.queries import register
 from etl_seattle_call_data_spark.sources.registry import load_table
 
@@ -203,7 +204,7 @@ def q_segment_migration_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         rank_name="rank",
         # ranked feeds the 2-row totals branch AND the segment probe —
         # barrier once (multi-consumer rule)
-    ).localCheckpoint(eager=False)
+    ).transform(barrier)
     totals = ranked.groupBy("half").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_half")
     )

@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from etl_seattle_call_data_spark.operators import dq, text
+from etl_seattle_call_data_spark.operators.util import barrier
 from etl_seattle_call_data_spark.plans.docs_queries import _DUCK_TOKENS
 from etl_seattle_call_data_spark.plans.mlprep_queries import _DUCK_BIGRAMS
 from etl_seattle_call_data_spark.plans.queries import register
@@ -326,7 +327,7 @@ def q_pearson_residual_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
         # r11: cells feeds the margins branch AND the grand-total scalar
         # — checkpoint the bounded 125-cell table once (multi-consumer
         # rule; the upstream is an orders⋈customer join).
-        .localCheckpoint(eager=False)
+        .transform(barrier)
     )
     m = cells.select(
         "nation",
@@ -583,7 +584,7 @@ def q_cents_digit_uniformity(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).cast("bigint").alias("o_d"))
         # r11: consumed by the total scalar AND the chi2 rollup — one
         # orders scan instead of two (bounded 100-digit table).
-        .localCheckpoint(eager=False)
+        .transform(barrier)
     )
     tot = cells.agg(F.sum("o_d").cast("bigint").alias("n"))
     t = cells.crossJoin(F.broadcast(tot)).agg(

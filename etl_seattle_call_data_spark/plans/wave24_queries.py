@@ -21,6 +21,7 @@ from etl_seattle_call_data_spark.operators.ranking import (
     two_phase_cumsum_in_groups,
     two_phase_rank_in_groups,
 )
+from etl_seattle_call_data_spark.operators.util import barrier
 from etl_seattle_call_data_spark.plans.docs_queries import _DUCK_TOKENS
 from etl_seattle_call_data_spark.plans.queries import register
 from etl_seattle_call_data_spark.plans.wave10_queries import (
@@ -623,7 +624,7 @@ def q_mahalanobis_outliers_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
         # checkpoint the order-scale (okey, x, y) rollup once instead of
         # running the orders⋈lineitem join+agg twice (multi-consumer
         # rule; ~3 narrow longs per order, trivial blocks).
-        .localCheckpoint(eager=False)
+        .transform(barrier)
     )
     m = oc.agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
@@ -747,7 +748,7 @@ def q_two_way_effects_decomposition(
         # r11: cells feeds the margins branch AND the grand-total scalar
         # — checkpoint the bounded 125-cell table once instead of running
         # the orders⋈customer rollup twice (multi-consumer rule).
-        .localCheckpoint(eager=False)
+        .transform(barrier)
     )
     m = cells.select(
         "nation",

@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from etl_seattle_call_data_spark.operators.util import barrier
 from etl_seattle_call_data_spark.plans.docs_queries import _DUCK_TOKENS
 from etl_seattle_call_data_spark.plans.queries import register
 from etl_seattle_call_data_spark.sources.registry import load_table
@@ -533,7 +534,7 @@ def q_shift_share_location_quotient(
         # grand-total scalar) — un-materialized, the 4-way fact join +
         # rollup executes twice (CLAUDE.md multi-consumer rule). The
         # checkpoint is a bounded 625-cell table.
-        .localCheckpoint(eager=False)
+        .transform(barrier)
     )
     m = cells.select(
         "nation",

@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from etl_seattle_call_data_spark.operators import ranking
+from etl_seattle_call_data_spark.operators.util import barrier
 from etl_seattle_call_data_spark.plans.queries import register
 from etl_seattle_call_data_spark.sources.registry import load_table
 
@@ -146,7 +147,7 @@ def q_recursive_reachability(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM seq
         WHERE prev_type IS NOT NULL AND prev_type <> event_type
         """
-    ).localCheckpoint(eager=False)
+    ).transform(barrier)
     edges.createOrReplaceTempView("__reach_edges_r11")
     return spark.sql(
         """
@@ -305,7 +306,7 @@ def q_interval_overlap_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     tl = counted.unionByName(marks)
     # r11 (§5 spill, VERDICT item 4): materialize=False — the cumsum
-    # helper's default lazy localCheckpoint would MATERIALIZE this
+    # helper's default barrier would MATERIALIZE this
     # ~(1 + 2·#smaller-types)·|events| marker stream to executor
     # storage, which is exactly what ground at the third decade (sf100:
     # 369.5 s, 2.91×/R with rows growing ×10). The upstream is a cheap
@@ -532,7 +533,7 @@ def q_pagerank_copurchase_3iter(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r11 (kcore cadence): deg feeds FOUR plan branches (rank init + the
     # three damping updates) — un-materialized, Catalyst re-aggregates
     # the edge cache once per branch, and the unrolled plan nests the
-    # duplicated deg/edge trees (a 3195-line explain). localCheckpoint
+    # duplicated deg/edge trees (a 3195-line explain). Hold
     # deg ONCE: each round's plan then scans two materialized inputs
     # (edge cache + deg RDD) and the plan is linear in iterations.
     # Measured negative (do not re-add): ALSO checkpointing each rank
@@ -542,7 +543,7 @@ def q_pagerank_copurchase_3iter(spark: SparkSession, sf_dir: str) -> DataFrame:
     deg = (
         edges.groupBy(F.col("src").alias("node"))
         .agg(F.count(F.lit(1)).cast("bigint").alias("d"))
-        .localCheckpoint(eager=False)
+        .transform(barrier)
     )
     n_nodes = deg.count()  # bounded scalar (node count), IVF-codebook class
     base_fp = ((_PR_TOTAL * 15) // 100) // n_nodes

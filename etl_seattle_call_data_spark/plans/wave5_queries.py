@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from etl_seattle_call_data_spark.operators import dq, text
-from etl_seattle_call_data_spark.operators.util import cache_swap, spread
+from etl_seattle_call_data_spark.operators.util import barrier, cache_swap, spread
 from etl_seattle_call_data_spark.plans.docs_queries import _DUCK_COS, _DUCK_Q, _DUCK_TOKENS
 from etl_seattle_call_data_spark.plans.queries import register
 from etl_seattle_call_data_spark.sources.registry import load_table
@@ -1380,7 +1380,7 @@ def q_shortest_path_bellman_ford(spark: SparkSession, sf_dir: str) -> DataFrame:
             # per-round lineage cut, same cadence as kcore_peeling_3round:
             # plan depth stays constant per round so the relax count can
             # grow without re-deriving every prior round's join
-            .localCheckpoint(eager=False)
+            .transform(barrier)
         )
     return (
         dist.select(F.col("node").alias("part"), F.col("d").alias("dist_fp"))
@@ -2683,7 +2683,7 @@ def q_kcore_peeling_3round(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # shared src-partitioned symmetric edge cache (memo_copurchase_edges):
     # scanned once per round below, never copied — the only frames that
-    # iterate (and localCheckpoint) are node-scale degree tables.
+    # iterate (each behind a barrier) are node-scale degree tables.
     edges = memo_copurchase_edges(spark, sf_dir).select("src", "dst")
     deg = edges.groupBy(F.col("src").alias("node")).agg(
         F.count(F.lit(1)).cast("bigint").alias("d")
@@ -2692,7 +2692,7 @@ def q_kcore_peeling_3round(spark: SparkSession, sf_dir: str) -> DataFrame:
         # node-scale lineage cut: deg feeds BOTH branches (removed set
         # + alive set) every round — without it the whole prefix would
         # re-execute 2^rounds times. Cheap: |nodes| rows, not |edges|.
-        deg = deg.localCheckpoint(eager=False)
+        deg = barrier(deg)
         removed = deg.filter(F.col("d") < 3).select("node")
         alive = deg.filter(F.col("d") >= 3)
         # Degree loss = edges into THIS round's removed set. The removed

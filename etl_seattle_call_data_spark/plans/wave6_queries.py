@@ -19,6 +19,7 @@ from pyspark.sql.window import Window
 
 from etl_seattle_call_data_spark.operators import dq
 from etl_seattle_call_data_spark.operators.sampling import hash_bucket
+from etl_seattle_call_data_spark.operators.util import barrier
 from etl_seattle_call_data_spark.plans.queries import register
 from etl_seattle_call_data_spark.sources.registry import load_table
 
@@ -661,8 +662,8 @@ def q_dedup_substring_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r11: capped feeds BOTH arms of the positional pair join — without a
     # barrier the df-cap aggregate + semi-join re-evaluates once per arm
     # (the cached sh bounds that at 2x the cap join, but the join itself
-    # is hash-heavy). Lazy localCheckpoint runs it once.
-    capped = sh.join(okh, "h").localCheckpoint(eager=False)
+    # is hash-heavy). The barrier runs it once.
+    capped = barrier(sh.join(okh, "h"))
     a = capped.select(
         F.col("h"), F.col("doc_id").alias("id_a"), F.col("pos").alias("pos_a")
     )

@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etl_seattle_call_data_spark.operators.sampling import hash_bucket
-from etl_seattle_call_data_spark.operators.util import cache_swap
+from etl_seattle_call_data_spark.operators.util import barrier, cache_swap
 from etl_seattle_call_data_spark.plans.queries import register
 from etl_seattle_call_data_spark.sources.registry import load_table
 
@@ -786,7 +786,7 @@ def q_label_propagation_2round(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .alias("label")
             )
         )
-        # no per-round localCheckpoint: each generation has exactly ONE
+        # no per-round barrier: each generation has exactly ONE
         # consumer (next round's join, then the final rollup), so there
         # is no duplicate evaluation to cut, and at 2 unrolled rounds the
         # lineage depth is constant — the barrier only cost wall-clock
@@ -872,10 +872,10 @@ def q_hits_hubs_authorities(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sum("h").cast("bigint").alias("a"))
         # r11: a2 feeds TWO consumers (the 1-row max branch and the final
         # projection) — un-materialized, the whole two-iteration join
-        # pipeline executes twice (CLAUDE.md multi-consumer rule). Lazy
-        # localCheckpoint runs it once; both branches read the ~|parts|
+        # pipeline executes twice (CLAUDE.md multi-consumer rule). The
+        # barrier runs it once; both branches read the ~|parts|
         # materialized rows.
-        .localCheckpoint(eager=False)
+        .transform(barrier)
     )
     mx = a2.agg(F.max("a").cast("bigint").alias("m"))
     return (
@@ -1118,12 +1118,12 @@ def q_bpe_merge_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 2^round times — 7 words-explode passes for 3 rounds (measured as
     # 8 BNLJ nodes / 28 Exchanges in the r10 before-plan). The frames
     # are vocab-bounded, exactly the expensive-subtree class CLAUDE.md's
-    # materialization rule targets: one lazy localCheckpoint per round
+    # materialization rule targets: one barrier per round
     # makes every vocabulary exactly once-evaluated (r10: 1.53s -> ~0.9s
     # at sf0.1, 28 -> 8 Exchanges).
-    t1, v1 = bpe_round(vocab.localCheckpoint(eager=False))
-    t2, v2 = bpe_round(v1.localCheckpoint(eager=False))
-    t3, v3 = bpe_round(v2.localCheckpoint(eager=False))
+    t1, v1 = bpe_round(barrier(vocab))
+    t2, v2 = bpe_round(barrier(v1))
+    t3, v3 = bpe_round(barrier(v2))
     out = (
         t1.select(F.lit(1).cast("int").alias("round"), F.col("bg").alias("merged_pair"), "n")
         .unionByName(

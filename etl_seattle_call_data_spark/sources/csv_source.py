@@ -6,29 +6,22 @@ Re-expresses the reference's two-pass safe extraction
 1. infer the schema from a configurable sample (``samplingRatio`` —
    the inference job touches ~1% of the input);
 2. re-read the full file with the frozen schema, ``DROPMALFORMED``,
-   UTF-8, empty-string→null;
-3. optional row cap — the reference passed a ``maxRows`` CSV option,
-   which vanilla Spark silently ignores (SURVEY §7.4.5); the working
-   equivalent is ``df.limit(n)``;
-4. optional DISK_ONLY persist of the scan (extract.py:76). NOTE the
-   reference persists the RAW scan, which makes its 13-step transform
-   recompute once per star-table write; the pipeline orchestrator here
-   persists the TRANSFORMED frame instead (SURVEY §4.2).
+   UTF-8, empty-string→null.
+
+No row cap: the reference passed a ``maxRows`` CSV option, which
+vanilla Spark silently ignores (SURVEY §7.4.5), so the reference always
+read every row. The reference also DISK_ONLY-persists the RAW scan
+(extract.py:76), which makes its 13-step transform recompute once per
+star-table write; the pipeline orchestrator here persists the
+TRANSFORMED frame instead (SURVEY §4.2).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.storagelevel import StorageLevel
 
 
-def read_csv_sampled(
-    spark: SparkSession,
-    path: str,
-    sample_ratio: float = 0.01,
-    max_rows: int | None = None,
-    persist_disk: bool = False,
-) -> DataFrame:
+def read_csv_sampled(spark: SparkSession, path: str, sample_ratio: float = 0.01) -> DataFrame:
     schema = (
         spark.read.option("header", "true")
         .option("inferSchema", "true")
@@ -38,7 +31,7 @@ def read_csv_sampled(
         .csv(path)
         .schema
     )
-    df = (
+    return (
         spark.read.schema(schema)
         .option("header", "true")
         .option("mode", "DROPMALFORMED")
@@ -47,19 +40,12 @@ def read_csv_sampled(
         .option("nanValue", "")
         .csv(path)
     )
-    if max_rows is not None:
-        df = df.limit(max_rows)
-    if persist_disk:
-        df = df.persist(StorageLevel.DISK_ONLY)
-    return df
 
 
-def read_csv_safe(
-    spark: SparkSession, path: str, retry_sample_ratio: float = 0.05, retry_max_rows: int = 500_000
-) -> DataFrame:
+def read_csv_safe(spark: SparkSession, path: str, retry_sample_ratio: float = 0.05) -> DataFrame:
     """Retry ladder (reference extract.py:102-119): defaults first, then a
-    larger inference sample with a bounded row count."""
+    larger inference sample. Both attempts read every row."""
     try:
         return read_csv_sampled(spark, path)
     except Exception:
-        return read_csv_sampled(spark, path, sample_ratio=retry_sample_ratio, max_rows=retry_max_rows)
+        return read_csv_sampled(spark, path, sample_ratio=retry_sample_ratio)

@@ -55,6 +55,7 @@ from etl_seattle_call_data_spark.operators.dedup import (
     minhash_band_keys,
 )
 from etl_seattle_call_data_spark.operators.text import canonical_text
+from etl_seattle_call_data_spark.operators.util import persisted
 from etl_seattle_call_data_spark.streaming.sinks import KeyedUpsertSink
 
 
@@ -84,13 +85,12 @@ def dedup_writer(
         fp = F.md5(canonical_text(F.col(text_col))).alias("fingerprint")
         with_fp = batch.select("*", fp)
         w = Window.partitionBy("fingerprint").orderBy(id_col)
-        firsts = (
+        first_rows = (
             with_fp.withColumn("__rn", F.row_number().over(w))
             .filter(F.col("__rn") == 1)
             .drop("__rn")
-            .persist()
         )
-        try:
+        with persisted(first_rows) as firsts:
             # bucket-pruned probe read: only store buckets the batch's
             # fingerprints hash into are scanned (equal keys share a
             # bucket, so the anti-join below is exactly equivalent to
@@ -105,10 +105,7 @@ def dedup_writer(
                     corpus_fp_col="fingerprint", new_fp_col="fingerprint",
                 )
             # join back on the id for the full novel rows (batch-scale)
-            novel = firsts.join(
-                novel_ids.select(id_col), id_col, "left_semi"
-            ).persist()
-            try:
+            with persisted(firsts.join(novel_ids.select(id_col), id_col, "left_semi")) as novel:
                 write_unique(novel.drop("fingerprint"), epoch_id)
                 store.upsert_batch(
                     novel.select(
@@ -116,10 +113,6 @@ def dedup_writer(
                     ),
                     epoch_id,
                 )
-            finally:
-                novel.unpersist()
-        finally:
-            firsts.unpersist()
 
     return _write
 
@@ -161,12 +154,11 @@ def near_dedup_writer(
         )
 
     def _write(batch: DataFrame, epoch_id: int) -> None:
-        batch = batch.persist()
         bands = minhash_band_keys(
             batch, num_hashes=num_hashes, rows_per_band=rows_per_band,
             id_col=id_col, text_col=text_col, n=shingle_n,
-        ).persist()
-        try:
+        )
+        with persisted(batch) as batch, persisted(bands) as bands:
             # ids hitting the cross-batch store on any band — probe via
             # the bucket-pruned read (scan volume = touched/n_buckets of
             # the store, not the store; see KeyedUpsertSink.read_for_keys)
@@ -189,22 +181,15 @@ def near_dedup_writer(
                 .select(id_col)
                 .distinct()
             )
-            novel = (
-                batch.join(store_hits, id_col, "left_anti")
-                .join(batch_dups, id_col, "left_anti")
-                .persist()
+            novel_rows = batch.join(store_hits, id_col, "left_anti").join(
+                batch_dups, id_col, "left_anti"
             )
-            try:
+            with persisted(novel_rows) as novel:
                 write_unique(novel, epoch_id)
                 store.upsert_batch(
                     bands.join(novel.select(id_col), id_col, "left_semi")
                     .select("band_key", F.col(id_col).alias("first_doc_id")),
                     epoch_id,
                 )
-            finally:
-                novel.unpersist()
-        finally:
-            bands.unpersist()
-            batch.unpersist()
 
     return _write

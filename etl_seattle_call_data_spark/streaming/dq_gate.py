@@ -24,6 +24,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from etl_seattle_call_data_spark.operators.dq import Rule
+from etl_seattle_call_data_spark.operators.util import persisted
 
 
 def violation_tags(df: DataFrame, rules: list[Rule]) -> DataFrame:
@@ -70,8 +71,7 @@ def quarantining_writer(
     rows (tag column kept for triage/replay), hand each to its writer."""
 
     def _write(batch: DataFrame, epoch_id: int) -> None:
-        tagged = violation_tags(batch, rules).persist()
-        try:
+        with persisted(violation_tags(batch, rules)) as tagged:
             write_clean(
                 tagged.filter(F.size("dq_violations") == 0).drop("dq_violations"),
                 epoch_id,
@@ -79,7 +79,5 @@ def quarantining_writer(
             write_quarantine(
                 tagged.filter(F.size("dq_violations") > 0), epoch_id
             )
-        finally:
-            tagged.unpersist()
 
     return _write

@@ -15,6 +15,7 @@ from etl_seattle_call_data_spark.operators.star_schema import (
     split_star_schema,
     write_star_schema,
 )
+from etl_seattle_call_data_spark.sources import csv_source
 from etl_seattle_call_data_spark.sources.csv_source import read_csv_sampled
 from tests.fixtures import write_fixture_csv
 
@@ -26,6 +27,28 @@ def transformed(spark, tmp_path_factory):
     assert n == 10
     raw = read_csv_sampled(spark, str(path), sample_ratio=1.0)
     return transform_call_data(raw).cache()
+
+
+def test_read_csv_safe_fallback_reads_every_row(spark, tmp_path, monkeypatch):
+    """When the first schema pass raises, the retry re-reads with the
+    larger sample and still returns every row: no row cap (the
+    reference's ``maxRows`` option is ignored by Spark, SURVEY §7.4.5)."""
+    path = str(tmp_path / "Call_Data.csv")
+    n = write_fixture_csv(path)
+    real = csv_source.read_csv_sampled
+    ratios = []
+
+    def first_attempt_fails(spark, path, sample_ratio=0.01):
+        ratios.append(sample_ratio)
+        if len(ratios) == 1:
+            raise ValueError("schema inference failed")
+        return real(spark, path, sample_ratio=sample_ratio)
+
+    monkeypatch.setattr(csv_source, "read_csv_sampled", first_attempt_fails)
+    df = csv_source.read_csv_safe(spark, path)
+    assert ratios == [0.01, 0.05]
+    assert df.count() == n
+    assert "Limit" not in df._jdf.queryExecution().optimizedPlan().toString()
 
 
 def _by_unit(transformed, dispatch_id):

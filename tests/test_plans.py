@@ -6,6 +6,9 @@ UDFs anywhere in the relational surface."""
 
 from __future__ import annotations
 
+import ast
+from pathlib import Path
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -62,6 +65,30 @@ def test_no_row_at_a_time_python_udf(spark, name):
     assert "BatchEvalPython" not in plan
     if name != "multimodal_features":
         assert "MapInPandas" not in plan
+
+
+_HOLD_METHODS = {"localCheckpoint", "checkpoint", "persist", "unpersist", "cache"}
+
+
+def test_materialization_only_in_util():
+    """How an intermediate is held (checkpoint vs persist, storage level,
+    release) is decided in operators/util.py alone: every other module
+    goes through barrier / persisted / cache_swap / cache_memo. Scans
+    the syntax tree, so comments and strings do not count."""
+    pkg = Path(__file__).resolve().parents[1] / "etl_seattle_call_data_spark"
+    util = pkg / "operators" / "util.py"
+    offenders = []
+    for path in sorted(pkg.rglob("*.py")):
+        if path == util:
+            continue
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr in _HOLD_METHODS
+            ):
+                offenders.append(f"{path.relative_to(pkg)}:{node.lineno} .{node.func.attr}(")
+    assert not offenders, offenders
 
 
 def test_q3_broadcasts_customer(spark):

@@ -23,6 +23,8 @@ from __future__ import annotations
 
 import argparse
 import json
+import math
+import statistics
 import sys
 
 
@@ -44,6 +46,20 @@ def load_queries(path: str) -> tuple[dict[str, float], float | None]:
         if depth == 0:
             return json.loads(obj[: i + 1]), None
     raise SystemExit(f"{path}: truncated queries dict")
+
+
+def regressions(
+    old: dict[str, float], new: dict[str, float], threshold: float, grace: float,
+    host_norm: bool = True,
+) -> tuple[list[str], float]:
+    """The one regression rule (this CLI, bench.py's ``flags``,
+    roundcheck): a query regresses when new > threshold * old * host +
+    grace. ``host`` is the median new/old ratio over the queries both
+    tables time (1.0 with ``host_norm=False``). Returns the regressed
+    names, sorted, and ``host``."""
+    common = sorted(n for n in new if old.get(n, 0) > 0)
+    host = statistics.median(new[n] / old[n] for n in common) if common and host_norm else 1.0
+    return [n for n in common if new[n] > threshold * old[n] * host + grace], host
 
 
 def main() -> int:
@@ -69,27 +85,19 @@ def main() -> int:
             f"sf={new_sf}; re-run bench.py at the matching SF"
         )
     common = sorted(set(old) & set(new))
-    import math
-    import statistics
-    host = 1.0
-    if common and not ns.no_host_norm:
-        host = statistics.median(new[n] / old[n] for n in common)
-        if not (0.7 <= host <= 1.6):
-            # a fleet-wide real slowdown (global config / session change)
-            # is indistinguishable from hardware drift once normalized out —
-            # flag it loudly instead of silently absorbing it
-            print(
-                f"WARNING: host-speed median {host:.3f} is outside the "
-                "plausible drift band [0.7, 1.6]; a fleet-wide code "
-                "regression would be normalized away. Re-run with "
-                "--no-host-norm to inspect raw ratios.",
-                file=sys.stderr,
-            )
-    regressed = [
-        (n, old[n], new[n])
-        for n in common
-        if new[n] > thr * old[n] * host + grace
-    ]
+    flagged, host = regressions(old, new, thr, grace, host_norm=not ns.no_host_norm)
+    if not (0.7 <= host <= 1.6):
+        # a fleet-wide real slowdown (global config / session change)
+        # is indistinguishable from hardware drift once normalized out —
+        # flag it loudly instead of silently absorbing it
+        print(
+            f"WARNING: host-speed median {host:.3f} is outside the "
+            "plausible drift band [0.7, 1.6]; a fleet-wide code "
+            "regression would be normalized away. Re-run with "
+            "--no-host-norm to inspect raw ratios.",
+            file=sys.stderr,
+        )
+    regressed = [(n, old[n], new[n]) for n in flagged]
     improved = [
         (n, old[n], new[n]) for n in common if new[n] < old[n] * host / thr
     ]
